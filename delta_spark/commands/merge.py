@@ -26,22 +26,36 @@ Execution (Spark-first):
      ONLY the touched files' rows against the source, with a
      first-matching-clause CASE projection per output column; rows
      from untouched files are never read or written.
-Metrics are collected with df.observe() — zero extra passes.
+Metrics are collected with df.observe(): no extra pass in the rewrite
+path; the deletion-vector path spends one job materializing the changed
+rows, so exactly one execution fills the Observation.
 """
 
 from __future__ import annotations
 
 import json
 import re
+from contextlib import ExitStack, contextmanager
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from delta_spark.commands.delete import cdf_enabled, match_files_by_name
+from delta_spark.commands.delete import (cdf_enabled, mask_rows_with_dvs,
+                                         match_files_by_name)
+from delta_spark.commands.update import _split_ident, set_value_sqls
 from delta_spark.log import DeltaLog
-from delta_spark.reader import read_files_df
+from delta_spark.reader import (
+    materialized_row_commit_col,
+    materialized_row_id_col,
+    read_files_df,
+    read_files_with_stable_ids,
+    with_stable_row_ids,
+)
+from delta_spark.schema import default_values, quote_ident, sql_type
 from delta_spark.stats import DEFAULT_NUM_INDEXED_COLS
 from delta_spark.transaction import OptimisticTransaction, dml_transaction
+from delta_spark.util import plan_size_estimate, scoped_dml_shuffle_width
 from delta_spark.writer import write_cdc_files, write_table_files
 
 
@@ -49,10 +63,33 @@ class MergeError(Exception):
     pass
 
 
-class _ValueColumnFallback(Exception):
-    """Internal: the one-string SQL fast path of _value_column cannot
-    express this clause (nested struct-field SET) or the type's DDL
-    text failed to parse — use the Column-building path."""
+@contextmanager
+def _on_driver_thread(fn, *args):
+    """Run ``fn(*args)`` on a driver thread while the with-body runs;
+    the yielded dict receives its result under "val". Exit joins the
+    thread. If the body raised, the thread's error (if any) becomes
+    the body error's ``__cause__``, so neither is lost; otherwise the
+    thread's error is re-raised."""
+    out: dict = {}
+
+    def run():
+        try:
+            out["val"] = fn(*args)
+        except BaseException as e:  # re-raised after join
+            out["err"] = e
+
+    thread = InheritableThread(target=run)
+    thread.start()
+    try:
+        yield out
+    except BaseException as e:
+        thread.join()
+        if "err" in out:
+            raise e from out["err"]
+        raise
+    thread.join()
+    if "err" in out:
+        raise out["err"]
 
 
 def _sqlify(x):
@@ -269,24 +306,21 @@ class MergeBuilder:
 
     def _expand_star(self, clause: _Clause, cols: list[str]) -> dict[str, str]:
         if clause.values.get("*") == "*":
-            out = {c: f"{self.src}.{c}" for c in cols}
+            out = {quote_ident(c): f"{self.src}.{quote_ident(c)}" for c in cols}
             if clause.kind == "update":
                 # UPDATE SET * never touches IDENTITY columns — they
                 # keep the matched row's value (the explicit-key
                 # spelling raises; star must not silently overwrite)
                 from delta_spark.schema import identity_info
 
-                for c in identity_info(getattr(self, "_schema", None)
-                                       or T.StructType([])):
-                    out.pop(c, None)
+                for c in identity_info(self._schema):
+                    out.pop(quote_ident(c), None)
             return out
         return clause.values
 
     def _set_key_parts(self, k: str) -> list[str]:
         """SET/INSERT target → identifier parts: optionally backquoted,
         target-alias prefix stripped (DeltaMergeActionResolver)."""
-        from delta_spark.commands.update import _split_ident
-
         parts = _split_ident(k)
         if len(parts) > 1 and parts[0].lower() == self.tgt.lower():
             parts = parts[1:]
@@ -421,7 +455,7 @@ class MergeBuilder:
         fold = {c.lower() for c in cols}
         from delta_spark.schema import identity_info as _idinfo
 
-        idents = {c.lower() for c in _idinfo(self._schema or snapshot.schema)}
+        idents = {c.lower() for c in _idinfo(self._schema)}
         for cl in self.matched + self.not_matched + self.not_matched_by_source:
             if cl.kind == "delete" or cl.values.get("*") == "*":
                 continue
@@ -454,6 +488,7 @@ class MergeBuilder:
         # conjuncts (findTouchedFiles data-skipping): a merge keyed on
         # a partition/date column scans only the matching files, not
         # the whole table.
+        # (imported at call time: tests spy on the reader entry point)
         from delta_spark.reader import read_files_with_index
 
         prune_pred = self._target_pruning_predicate(snapshot)
@@ -469,7 +504,7 @@ class MergeBuilder:
             candidates = snapshot.all_files
         target_all = read_files_with_index(
             self.spark, snapshot, candidates).selectExpr(
-                *[f"`{f.name}`" for f in snapshot.schema.fields],
+                *[quote_ident(f.name) for f in snapshot.schema.fields],
                 "`__file_base` AS `__delta_file`",
                 "monotonically_increasing_id() AS `__t_rowid`")
         joined1 = (target_all.alias(self.tgt)
@@ -481,9 +516,6 @@ class MergeBuilder:
         # shuffle width ∝ bytes this command actually moves (guide
         # §2.2), session width as the cap — a small merge stops paying
         # core-count fan-out; None (no source size estimate) = no-op
-        from delta_spark.util import (plan_size_estimate,
-                                      scoped_dml_shuffle_width)
-
         src_bytes = plan_size_estimate(source)
         cand_bytes = (sum(f.size or 0 for f in candidates) + src_bytes
                       if src_bytes is not None else None)
@@ -510,78 +542,100 @@ class MergeBuilder:
         if not touched and not self.not_matched:
             return txn.commit([], "MERGE", self._op_params(), {"numTargetRowsUpdated": "0"})
 
-        # ---- phase 2: joint rewrite ----
-        join_type = "full_outer" if self.not_matched else "left_outer"
-        row_tracked = str(cfg.get("delta.enableRowTracking",
-                                  "false")).lower() == "true"
         touched_bytes = (sum(f.size or 0 for f in touched) + src_bytes
                          if src_bytes is not None else None)
-        if str(cfg.get("delta.enableDeletionVectors",
-                       "false")).lower() == "true":
-            return self._execute_phase2_dv(txn, source, touched, cols,
-                                           join_type, row_tracked, cfg,
-                                           input_bytes=touched_bytes)
-        if row_tracked:
-            from delta_spark.reader import read_files_with_stable_ids
+        return self._phase2(txn, source, touched, cols, cfg, touched_bytes)
 
-            touched_df = (read_files_with_stable_ids(
-                self.spark, snapshot, touched)
-                .withColumn("__t_exists", F.lit(True)))
+    def _phase2(self, txn, source: DataFrame, touched, cols, cfg,
+                input_bytes: Optional[int]) -> int:
+        """Phase 2: FULL OUTER (LEFT OUTER without insert clauses) join
+        of the touched files' rows with the source, each row tagged
+        with its first matching clause (``__action``, observed for the
+        row metrics) and projected to the output columns. The touched
+        rows are retired one of two ways:
+
+        * rewrite: every kept row — copies included — is written to
+          new files and the touched files are removed;
+        * deletion vectors (``delta.enableDeletionVectors``; reference
+          MergeIntoCommand.scala:136 shouldWriteDeletionVectors +
+          DMLWithDeletionVectorsHelper): matched update/delete rows are
+          masked in place and only the update outputs and inserts are
+          written — copied rows never move, so a merge touching 1% of
+          a file's rows no longer rewrites the other 99%. The changed
+          rows are persisted and materialized by one job, which alone
+          fills the metrics Observation; the DV bitmap job then runs on
+          a driver thread beside the CDF and new-file writes, which
+          back-fill its tail."""
+        snapshot = txn.snapshot
+        out_snapshot = self._out_snapshot(snapshot)
+        use_dv = str(cfg.get("delta.enableDeletionVectors",
+                             "false")).lower() == "true"
+        row_tracked = str(cfg.get("delta.enableRowTracking",
+                                  "false")).lower() == "true"
+        if use_dv:
+            from delta_spark.reader import read_files_with_index
+
+            touched_df = read_files_with_index(
+                self.spark, snapshot, touched,
+                request_materialized_row_id=row_tracked)
+            if row_tracked:
+                touched_df = with_stable_row_ids(touched_df, snapshot, touched)
+        elif row_tracked:
+            touched_df = read_files_with_stable_ids(self.spark, snapshot, touched)
         else:
-            touched_df = (read_files_df(self.spark, snapshot, touched)
-                          .withColumn("__t_exists", F.lit(True)))
-        src_df = source.withColumn("__s_exists", F.lit(True))
-        joined = (touched_df.alias(self.tgt)
-                  .join(src_df.alias(self.src), F.expr(self.condition), join_type))
-
+            touched_df = read_files_df(self.spark, snapshot, touched)
+        join_type = "full_outer" if self.not_matched else "left_outer"
+        joined = (touched_df.withColumn("__t_exists", F.lit(True)).alias(self.tgt)
+                  .join(source.withColumn("__s_exists", F.lit(True)).alias(self.src),
+                        F.expr(self.condition), join_type))
         obs = Observation("merge_metrics")
-        joined = (joined.withColumn("__action", self._action_col())
+        joined = (joined.withColumn("__action", F.expr(self._action_sql()))
                   .observe(obs, *self._metric_cols()))
-
-        kept = joined.filter(self._KEEP_SQL)
-        if not row_tracked:
-            projected = self._project_outputs(kept, cols, snapshot)
-        else:
-            out_cols = [self._value_column(c, snapshot).alias(c)
-                        for c in cols]
+        row_tracking_sqls = []
+        if row_tracked:
             # copied + updated target rows keep their stable row id;
-            # updated rows take the new commit version (null → default);
+            # changed rows take the new commit version (null → default);
             # inserted rows are brand new (null both → defaults)
-            from delta_spark.reader import (
-                materialized_row_commit_col,
-                materialized_row_id_col,
-            )
-
             mat = materialized_row_id_col(snapshot)
             matv = materialized_row_commit_col(snapshot)
             if mat is not None:
-                out_cols.append(
-                    F.when(F.col("__action").startswith("i"),
-                           F.lit(None).cast("long"))
-                    .otherwise(touched_df[mat]).alias(mat))
+                row_tracking_sqls.append(
+                    "CASE WHEN __action LIKE 'i%' THEN CAST(NULL AS BIGINT) "
+                    f"ELSE {self.tgt}.{quote_ident(mat)} END AS {quote_ident(mat)}")
             if matv is not None:
-                out_cols.append(
-                    F.when(F.col("__action") == "copy", touched_df[matv])
-                    .otherwise(F.lit(None).cast("long")).alias(matv))
-            projected = kept.select(*out_cols, F.col("__action"))
-        resultw = self._finalize_inserts(self._apply_generated_merge(
-            projected, snapshot, keep_action=True), snapshot)
-        from delta_spark.util import scoped_dml_shuffle_width as _scoped_w
-
-        with _scoped_w(self.spark, touched_bytes):
-            with_cdf = cdf_enabled(cfg)
+                row_tracking_sqls.append(
+                    f"CASE WHEN __action = 'copy' THEN {self.tgt}.{quote_ident(matv)} "
+                    f"ELSE CAST(NULL AS BIGINT) END AS {quote_ident(matv)}")
+        if use_dv:
+            # copied rows stay where they are: only changed rows flow on
+            # (planned here, at the session's shuffle width)
+            joined = joined.filter(
+                "__action <> 'copy' AND __action <> 'skip'").persist()
+        with ExitStack() as stack:
+            stack.enter_context(scoped_dml_shuffle_width(self.spark, input_bytes))
+            if use_dv:
+                stack.callback(joined.unpersist)
+                joined.count()
+                positions = (joined.filter("__t_exists IS NOT NULL")
+                             .selectExpr("__file_base AS file_base",
+                                         "__row_idx AS row_index"))
+                dv = stack.enter_context(_on_driver_thread(
+                    mask_rows_with_dvs, self.spark, txn, touched, positions))
+            projected = joined.filter(self._KEEP_SQL).selectExpr(
+                *self._output_sqls(cols), *row_tracking_sqls, "`__action`")
+            resultw = self._finalize_inserts(self._apply_generated_merge(
+                projected, snapshot, keep_action=True), snapshot)
             cdc_actions = []
-            if with_cdf:
+            if cdf_enabled(cfg):
                 # insert images come from the FINALIZED frame so
                 # allocated identity values in the feed match the
                 # written rows
-                cdc_actions = self._write_cdf(
-                    joined, cols, self._out_snapshot(snapshot),
-                    insert_df=resultw)
-
-            adds = write_table_files(resultw.drop("__action"),
-                                     self._out_snapshot(snapshot))
-        removes = [f.remove() for f in touched]
+                cdc_actions = self._write_cdf(joined, cols, out_snapshot,
+                                              insert_df=resultw)
+            adds = write_table_files(resultw.drop("__action"), out_snapshot)
+        dv_adds, removes = [], [f.remove() for f in touched]
+        if use_dv:
+            dv_adds, removes, _ = dv["val"]
         try:
             m = obs.get
             metrics = {
@@ -594,129 +648,8 @@ class MergeBuilder:
             metrics = {}
         metrics["numTargetFilesRemoved"] = str(len(removes))
         metrics["numTargetFilesAdded"] = str(len(adds))
-        evo = [self._evolution_meta] if self._evolution_meta is not None else []
-        return txn.commit(evo + list(adds) + list(removes) + list(cdc_actions),
-                          "MERGE", self._op_params(), metrics)
-
-    def _execute_phase2_dv(self, txn, source: DataFrame, touched, cols,
-                           join_type: str, row_tracked: bool, cfg,
-                           input_bytes: Optional[int] = None) -> int:
-        """Phase 2 with deletion vectors (reference
-        MergeIntoCommand.scala:136 shouldWriteDeletionVectors +
-        DMLWithDeletionVectorsHelper): matched update/delete rows are
-        masked IN-PLACE via DVs and only the update outputs and inserts
-        are written as new files — copied rows never move. A merge
-        touching 1% of the rows in a file no longer rewrites the other
-        99%, the dominant MERGE cost at scale. The changed-row subset
-        (small side) is persisted so the DV job, the new-file write,
-        and the CDF write share one pass over the big join."""
-        from delta_spark.commands.delete import mask_rows_with_dvs
-        from delta_spark.reader import (
-            _base_row_id_expr,
-            materialized_row_commit_col,
-            materialized_row_id_col,
-            read_files_with_index,
-        )
-
-        snapshot = txn.snapshot
-        touched_df = (read_files_with_index(
-            self.spark, snapshot, touched,
-            request_materialized_row_id=row_tracked)
-            .withColumn("__t_exists", F.lit(True)))
-        src_df = source.withColumn("__s_exists", F.lit(True))
-        joined = (touched_df.alias(self.tgt)
-                  .join(src_df.alias(self.src), F.expr(self.condition), join_type))
-        obs = Observation("merge_metrics")
-        joined = (joined
-                  .withColumn("__action", self._action_col())
-                  .observe(obs, *self._metric_cols()))
-        # the observe node sees every joined row (copies included) even
-        # though downstream only consumes the changed subset
-        changed = joined.filter(
-            "__action <> 'copy' AND __action <> 'drop'").persist()
-        from contextlib import ExitStack
-
-        from delta_spark.util import scoped_dml_shuffle_width as _scoped_w
-
-        _stack = ExitStack()
-        _stack.enter_context(_scoped_w(self.spark, input_bytes))
-        dv_thread = None
-        dv_result: dict = {}
-        try:
-            positions = (changed
-                         .filter("__t_exists IS NOT NULL")
-                         .selectExpr("__file_base AS file_base",
-                                     "__row_idx AS row_index"))
-            # The DV bitmap job and the new-file write are independent
-            # once `changed` is persisted (concurrent first computation
-            # of a cached partition is deduped by the block manager), so
-            # run the DV job on a driver thread and let the write's
-            # tasks back-fill its tail instead of waiting for it.
-            from pyspark import InheritableThread
-
-            def _dv_job():
-                try:
-                    dv_result["val"] = mask_rows_with_dvs(
-                        self.spark, txn, touched, positions)
-                except BaseException as e:  # re-raised on join
-                    dv_result["err"] = e
-
-            dv_thread = InheritableThread(target=_dv_job)
-            dv_thread.start()
-
-            written = changed.filter(
-                "__action LIKE 'u%' OR __action LIKE 'i%'")
-            if not row_tracked:
-                projected = self._project_outputs(written, cols, snapshot)
-            else:
-                out_cols = [self._value_column(c, snapshot).alias(c)
-                            for c in cols]
-                # updated rows keep their stable id (materialized value,
-                # else default baseRowId+position); inserts are brand new;
-                # every output row takes the new commit's version
-                mat = materialized_row_id_col(snapshot)
-                matv = materialized_row_commit_col(snapshot)
-                if mat is not None:
-                    base = _base_row_id_expr(snapshot, touched,
-                                             "__file_base", "__row_idx")
-                    out_cols.append(
-                        F.when(F.col("__action").startswith("i"),
-                               F.lit(None).cast("long"))
-                        .otherwise(F.coalesce(touched_df[mat], base)).alias(mat))
-                if matv is not None:
-                    out_cols.append(F.lit(None).cast("long").alias(matv))
-                projected = written.select(*out_cols, F.col("__action"))
-            resultw = self._finalize_inserts(self._apply_generated_merge(
-                projected, snapshot, keep_action=True), snapshot)
-
-            cdc_actions = []
-            if cdf_enabled(cfg):
-                cdc_actions = self._write_cdf(
-                    changed, cols, self._out_snapshot(snapshot),
-                    insert_df=resultw)
-            adds = write_table_files(resultw.drop("__action"),
-                                     self._out_snapshot(snapshot))
-        finally:
-            if dv_thread is not None:
-                dv_thread.join()
-            _stack.close()
-            changed.unpersist()
-        if "err" in dv_result:
-            raise dv_result["err"]
-        dv_adds, removes, _ = dv_result["val"]
-        try:
-            m = obs.get
-            metrics = {
-                "numTargetRowsUpdated": str(m.get("updated") or 0),
-                "numTargetRowsDeleted": str(m.get("deleted") or 0),
-                "numTargetRowsInserted": str(m.get("inserted") or 0),
-                "numTargetRowsCopied": str(m.get("copied") or 0),
-            }
-        except Exception:
-            metrics = {}
-        metrics["numTargetFilesRemoved"] = str(len(removes))
-        metrics["numTargetFilesAdded"] = str(len(adds))
-        metrics["numDeletionVectorsAdded"] = str(len(dv_adds))
+        if use_dv:
+            metrics["numDeletionVectorsAdded"] = str(len(dv_adds))
         evo = [self._evolution_meta] if self._evolution_meta is not None else []
         return txn.commit(
             evo + list(dv_adds) + list(adds) + list(removes) + list(cdc_actions),
@@ -822,7 +755,7 @@ class MergeBuilder:
         for cl in self.not_matched:
             vals = self._insert_values_map(self._expand_star(cl, cols))
             subset = remaining.filter(cl.condition) if cl.condition else remaining
-            schema = getattr(self, "_schema", None) or snapshot.schema
+            schema = self._schema
             part = subset.select(*[
                 (F.expr(vals[c.lower()]) if c.lower() in vals
                  else F.lit(None)).cast(schema[c].dataType).alias(c)
@@ -853,9 +786,6 @@ class MergeBuilder:
         for p in parts[1:]:
             out = out.unionByName(p)
         out = self._finalize_inserts(out, snapshot)
-        from delta_spark.util import (plan_size_estimate,
-                                      scoped_dml_shuffle_width)
-
         src_bytes = plan_size_estimate(source)
         in_bytes = (sum(f.size or 0 for f in candidates) + src_bytes
                     if src_bytes is not None else None)
@@ -868,8 +798,7 @@ class MergeBuilder:
             adds = write_table_files(out, self._out_snapshot(snapshot))
         metrics = {"numTargetRowsInserted": str(sum(a.num_records or 0 for a in adds)),
                    "numTargetFilesAdded": str(len(adds))}
-        evo = [getattr(self, "_evolution_meta", None)]
-        evo = [e for e in evo if e is not None]
+        evo = [self._evolution_meta] if self._evolution_meta is not None else []
         return txn.commit(evo + list(adds) + list(cdc_actions), "MERGE", self._op_params(), metrics)
 
     def _qualify_target(self, expr: str, snapshot) -> str:
@@ -908,16 +837,15 @@ class MergeBuilder:
         return "".join(out)
 
     # rows to keep in phase-2 output: neither source-only rows with no
-    # applicable insert clause ('drop') nor deleted rows ('d...' tags;
-    # 'drop' also matches the LIKE — harmless, kept for text parity
-    # with the old Column filter ~isin('drop') & ~startswith('d'))
-    _KEEP_SQL = "NOT (__action IN ('drop')) AND NOT (__action LIKE 'd%')"
+    # applicable insert clause ('skip') nor deleted rows ('d...' tags)
+    _KEEP_SQL = "__action <> 'skip' AND NOT (__action LIKE 'd%')"
 
     def _action_sql(self) -> str:
-        """__action as ONE SQL CASE text (the F.when cascade costs ~10
-        py4j round trips per clause). CASE semantics match the Column
-        chain exactly: a NULL clause condition falls through to the
-        next WHEN, which is what coalesce(cond, false) produced."""
+        """__action as ONE SQL CASE text: per row category (matched,
+        source-only, target-only) the first clause whose condition is
+        true tags the row '<kind><category><index>' (a NULL condition
+        falls through to the next WHEN); untagged rows are 'copy'
+        (target rows) or 'skip' (source rows)."""
         def cascade(clauses: list[_Clause], prefix: str, default: str) -> str:
             whens = []
             for i, cl in enumerate(clauses):
@@ -929,57 +857,23 @@ class MergeBuilder:
             return f"(CASE {' '.join(whens)} ELSE '{default}' END)"
 
         m = cascade(self.matched, "m", "copy")
-        i = cascade(self.not_matched, "i", "drop")
+        i = cascade(self.not_matched, "i", "skip")
         s = cascade(self.not_matched_by_source, "s", "copy")
         return ("CASE WHEN (__t_exists IS NOT NULL "
                 "AND __s_exists IS NOT NULL) "
                 f"THEN {m} WHEN (__t_exists IS NULL) THEN {i} "
                 f"ELSE {s} END")
 
-    def _action_col(self):
-        """The __action Column: one parsed CASE; Column-cascade
-        fallback if the composed text fails to parse."""
-        try:
-            return F.expr(self._action_sql())
-        except Exception:
-            is_matched = (F.col("__t_exists").isNotNull()
-                          & F.col("__s_exists").isNotNull())
-            return self._action_column(is_matched,
-                                       F.col("__t_exists").isNull())
-
     def _metric_cols(self):
-        """The 4 observe() aggregates as parsed SQL (was 4 × ~50 py4j
-        round trips of F.sum(F.when(...)) construction). LIKE 'x%' ==
-        startswith for these wildcard-free tags; 'drop' counting under
-        'd%' matches the old startswith('d') behavior exactly."""
-        return [
-            F.expr("sum(CASE WHEN __action LIKE 'u%' THEN 1 ELSE 0 END)"
-                   ).alias("updated"),
-            F.expr("sum(CASE WHEN __action LIKE 'd%' THEN 1 ELSE 0 END)"
-                   ).alias("deleted"),
-            F.expr("sum(CASE WHEN __action LIKE 'i%' THEN 1 ELSE 0 END)"
-                   ).alias("inserted"),
-            F.expr("sum(CASE WHEN __action = 'copy' THEN 1 ELSE 0 END)"
-                   ).alias("copied"),
-        ]
-
-    def _action_column(self, is_matched, is_src_only):
-        """First-matching-clause resolution within each row category."""
-        def cascade(clauses: list[_Clause], prefix: str, default: str):
-            expr = F.lit(default)
-            for i in reversed(range(len(clauses))):
-                cl = clauses[i]
-                tag = F.lit(f"{cl.kind[0]}{prefix}{i}")
-                cond = F.coalesce(F.expr(cl.condition), F.lit(False)) if cl.condition else F.lit(True)
-                expr = F.when(cond, tag).otherwise(expr)
-            return expr
-
-        matched_expr = cascade(self.matched, "m", "copy")
-        insert_expr = cascade(self.not_matched, "i", "drop")
-        nbs_expr = cascade(self.not_matched_by_source, "s", "copy")
-        return (F.when(is_matched, matched_expr)
-                 .when(is_src_only, insert_expr)
-                 .otherwise(nbs_expr))
+        """The 4 observe() aggregates as parsed SQL. Tags are
+        wildcard-free and only delete tags start with 'd' (an unmatched
+        source row is 'skip'), so LIKE 'd%' counts deleted target rows
+        exactly."""
+        return [F.expr(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS {name}")
+                for name, cond in (("updated", "__action LIKE 'u%'"),
+                                   ("deleted", "__action LIKE 'd%'"),
+                                   ("inserted", "__action LIKE 'i%'"),
+                                   ("copied", "__action = 'copy'"))]
 
     def _finalize_inserts(self, df, snapshot):
         """Identity allocation for merge-inserted rows (IdentityColumn
@@ -991,7 +885,7 @@ class MergeBuilder:
         from delta_spark.schema import identity_info, with_identity_watermark
         from delta_spark.util import schema_from_json, schema_to_json
 
-        schema = getattr(self, "_schema", None) or snapshot.schema
+        schema = self._schema
         if not identity_info(schema) or not self.not_matched:
             return df
         explicit = set()
@@ -1005,8 +899,8 @@ class MergeBuilder:
         # updated rows keep their existing identity values untouched
         has_action = "__action" in df.columns
         if has_action:
-            ins = df.filter(F.col("__action").startswith("i"))
-            rest = df.filter(~F.col("__action").startswith("i"))
+            ins = df.filter("__action LIKE 'i%'")
+            rest = df.filter("NOT (__action LIKE 'i%')")
         else:  # insert-only fast path: every row is an insert
             ins, rest = df, None
         ins, filled = fill_identity_nulls(ins, schema, explicit)
@@ -1046,8 +940,8 @@ class MergeBuilder:
         return rest.unionByName(ins) if rest is not None else ins
 
     def _clause_tags(self):
-        """(action tag, clause) pairs — the same tag scheme
-        _action_column / _value_column stamp rows with."""
+        """(action tag, clause) pairs — the tag scheme _action_sql
+        stamps rows with."""
         return ([(f"{c.kind[0]}m{i}", c) for i, c in enumerate(self.matched)]
                 + [(f"{c.kind[0]}i{i}", c) for i, c in enumerate(self.not_matched)]
                 + [(f"{c.kind[0]}s{i}", c) for i, c in enumerate(self.not_matched_by_source)])
@@ -1066,229 +960,97 @@ class MergeBuilder:
         ``keep_action``); copied rows keep their stored values."""
         from delta_spark.schema import generation_expressions
 
-        schema = getattr(self, "_schema", None) or snapshot.schema
-        gens = generation_expressions(schema)
+        gens = generation_expressions(self._schema)
         if not gens or "__action" not in df.columns:
             return df if keep_action and "__action" in df.columns \
                 else df.drop("__action")
-        out_cols = []
+        texts = []
         for c in df.columns:
             if c == "__action":
                 if keep_action:
-                    out_cols.append(F.col(c))
+                    texts.append("`__action`")
                 continue
             e = gens.get(c)
-            if e is None:
-                out_cols.append(F.col(c))
-                continue
             tags = [t for t, cl in self._clause_tags()
                     if cl.kind != "delete"
                     and not self._explicitly_assigns(cl, c)]
-            if not tags:
-                out_cols.append(F.col(c))
+            if e is None or not tags:
+                texts.append(quote_ident(c))
                 continue
-            out_cols.append(
-                F.when(F.col("__action").isin(tags),
-                       F.expr(e).cast(df.schema[c].dataType))
-                .otherwise(F.col(c)).alias(c))
-        return df.select(*out_cols)
+            in_tags = ", ".join(f"'{t}'" for t in tags)
+            texts.append(
+                f"CASE WHEN __action IN ({in_tags}) THEN "
+                f"CAST(({e}) AS {sql_type(df.schema[c].dataType)}) "
+                f"ELSE {quote_ident(c)} END AS {quote_ident(c)}")
+        return df.selectExpr(*texts)
 
-    @staticmethod
-    def _relax_nullability(dt):
-        from delta_spark.schema import relax_nullability
+    def _tgt_ref(self, col: str) -> str:
+        """SQL text of a target column's pre-merge value; schema-evolved
+        columns don't exist on the target side of the join, so target
+        rows have no value for them (NULL)."""
+        if col in self._target_cols:
+            return f"{self.tgt}.{quote_ident(col)}"
+        return f"CAST(NULL AS {sql_type(self._schema[col].dataType)})"
 
-        return relax_nullability(dt)
-
-    def _value_column(self, col: str, snapshot):
-        """Output value for one column as a CASE over __action.
-
-        Fast path: build the whole CASE as ONE SQL text and parse it
-        with a single F.expr. The Column-by-Column construction below
-        costs ~10 py4j round trips per clause (measured ~40 ms per
-        column per merge — ~0.25 s of driver time on a 6-column
-        2-clause merge; the one-string parse is ~0.3 ms). Branch
-        contents, evaluation semantics and casts are text-identical to
-        what the Column chain builds: every THEN branch is cast to the
-        relaxed column type and the whole CASE is cast once more, with
-        the ELSE copy branch only cast by the outer cast. Falls back to
-        the Column path for nested struct-field SETs (withField has no
-        plain-SQL spelling here) or any type whose DDL text fails to
-        parse."""
-        try:
-            sql = self._value_sql(col, snapshot)
-        except _ValueColumnFallback:
-            return self._value_column_cols(col, snapshot)
-        try:
-            return F.expr(sql)
-        except Exception:
-            return self._value_column_cols(col, snapshot)
-
-    def _project_outputs(self, kept: DataFrame, cols: list[str],
-                         snapshot) -> DataFrame:
-        """All output-column CASEs in ONE selectExpr parse (one py4j
-        round trip) instead of one F.expr + alias pair per column.
-        Falls back to the per-Column path when any column has no
-        plain-SQL spelling (nested struct SET, unparseable DDL) or the
-        combined statement fails to parse/analyze."""
-        sel = None
-        try:
-            sel = [f"({self._value_sql(c, snapshot)}) AS "
-                   f"`{c.replace('`', '``')}`" for c in cols]
-        except _ValueColumnFallback:
-            pass
-        if sel is not None:
-            try:
-                return kept.selectExpr(*sel, "`__action`")
-            except Exception:
-                pass
-        return kept.select(
-            *[self._value_column(c, snapshot).alias(c) for c in cols],
-            F.col("__action"))
-
-    def _value_sql(self, col: str, snapshot) -> str:
-        schema = getattr(self, "_schema", None) or snapshot.schema
-        dt = self._relax_nullability(schema[col].dataType)
-        dts = dt.simpleString()
-        tcols = getattr(self, "_target_cols",
-                        {f.name for f in snapshot.schema.fields})
-        base = (f"{self.tgt}.{col}" if col in tcols
-                else f"CAST(NULL AS {dts})")
+    def _output_sqls(self, cols: list[str]) -> list[str]:
+        """``<value> AS `c``` per output column, all parsed by ONE
+        selectExpr (one py4j round trip for the whole projection): a
+        CASE over __action picks the tagged clause's value — the SET /
+        INSERT expression, the column's DEFAULT for an omitted insert
+        column, else the target's own value — cast to the column
+        type."""
+        schema = self._schema
         schema_cols = [f.name for f in schema.fields]
-        whens = []
+        defaults = default_values(schema)
+        branches = []  # (tag, {lower-cased column: value} | {column: value})
         for tag, cl in self._clause_tags():
             if cl.kind == "delete":
                 continue
             vals = self._expand_star(cl, schema_cols)
             if cl.kind == "insert":
-                ins = self._insert_values_map(vals)
-                if col.lower() in ins:
-                    v = ins[col.lower()]
+                branches.append((tag, cl.kind, self._insert_values_map(vals)))
+            else:
+                branches.append((tag, cl.kind, set_value_sqls(
+                    [(self._set_key_parts(k), v) for k, v in vals.items()],
+                    schema, self._tgt_ref)))
+        out = []
+        for c in cols:
+            dts = sql_type(schema[c].dataType)
+            whens = []
+            for tag, kind, vals in branches:
+                if kind == "insert":
+                    v = vals.get(c.lower()) or defaults.get(c) or "NULL"
                 else:
-                    from delta_spark.schema import default_values
+                    v = vals.get(c) or self._tgt_ref(c)
+                whens.append(f"WHEN __action = '{tag}' THEN CAST(({v}) AS {dts})")
+            value = self._tgt_ref(c)
+            if whens:
+                # tags are disjoint, so WHEN order is irrelevant
+                value = f"CASE {' '.join(whens)} ELSE ({value}) END"
+            out.append(f"CAST(({value}) AS {dts}) AS {quote_ident(c)}")
+        return out
 
-                    dflt = default_values(schema).get(col)
-                    v = dflt if dflt is not None else "NULL"
-            else:  # update
-                whole, nested = None, False
-                for k, sql in vals.items():
-                    parts = self._set_key_parts(k)
-                    if parts[0].lower() != col.lower():
-                        continue
-                    if len(parts) == 1:
-                        whole = sql
-                    else:
-                        nested = True
-                if nested:
-                    raise _ValueColumnFallback  # withField path
-                if whole is not None:
-                    v = whole
-                elif col in tcols:
-                    v = f"{self.tgt}.{col}"
-                else:
-                    v = "NULL"
-            whens.append(f"WHEN __action = '{tag}' "
-                         f"THEN CAST(({v}) AS {dts})")
-        if not whens:
-            return f"CAST(({base}) AS {dts})"
-        # the Column chain nests later clauses OUTERMOST; tags are
-        # disjoint so WHEN order is semantically irrelevant — keep
-        # declaration order for readability
-        return (f"CAST((CASE {' '.join(whens)} ELSE ({base}) END) "
-                f"AS {dts})")
-
-    def _value_column_cols(self, col: str, snapshot):
-        schema = getattr(self, "_schema", None) or snapshot.schema
-        dt = self._relax_nullability(schema[col].dataType)
-        if col in getattr(self, "_target_cols", {f.name for f in snapshot.schema.fields}):
-            expr = F.expr(f"{self.tgt}.{col}")  # copy default
-        else:
-            expr = F.lit(None).cast(dt)  # evolved column: target rows have no value
-        all_clauses = self._clause_tags()
-        schema_cols = [f.name for f in schema.fields]
-        for tag, cl in all_clauses:
-            if cl.kind == "delete":
-                continue
-            vals = self._expand_star(cl, schema_cols)
-            tcols = getattr(self, "_target_cols",
-                            {f.name for f in snapshot.schema.fields})
-            if cl.kind == "insert":
-                ins = self._insert_values_map(vals)
-                if col.lower() in ins:
-                    v = F.expr(ins[col.lower()])
-                else:
-                    # omitted column: DEFAULT expression when declared
-                    # (DeltaColumnDefaults), else NULL
-                    from delta_spark.schema import default_values
-
-                    dflt = default_values(schema).get(col)
-                    v = F.expr(dflt) if dflt is not None else F.lit(None)
-            else:  # update
-                whole, nested = None, []
-                for k, sql in vals.items():
-                    parts = self._set_key_parts(k)
-                    if parts[0].lower() != col.lower():
-                        continue
-                    if len(parts) == 1:
-                        whole = sql
-                    else:
-                        nested.append((parts[1:], sql))
-                if whole is not None:
-                    v = F.expr(whole)
-                elif nested:
-                    # struct-field updates in place, siblings preserved
-                    # (UpdateExpressionsSupport semantics)
-                    v = (F.expr(f"{self.tgt}.{col}") if col in tcols
-                         else F.lit(None).cast(dt))
-                    for path, sql in nested:
-                        v = v.withField(
-                            ".".join(f"`{p}`" for p in path), F.expr(sql))
-                elif col in tcols:
-                    v = F.expr(f"{self.tgt}.{col}")
-                else:
-                    # schema-evolved column absent from this UPDATE SET:
-                    # target rows have no pre-image value for it
-                    v = F.lit(None)
-            expr = F.when(F.col("__action") == tag, v.cast(dt)).otherwise(expr)
-        return expr.cast(dt)
-
-    def _write_cdf(self, joined, cols: list[str], snapshot, insert_df=None):
+    def _write_cdf(self, joined, cols: list[str], snapshot, insert_df):
         """Emit CDF rows: update_preimage/update_postimage, delete,
-        insert (MergeOutputGeneration CDF projection). With
-        ``insert_df`` (the finalized output frame, __action kept),
-        insert images are taken from it verbatim — identity values
-        allocated by _finalize_inserts land identically in the feed."""
-        def tgt_val(c):
-            # schema-evolved columns don't exist on the TARGET side of
-            # the join: preimage/delete rows show them as NULL
-            # (reference MergeOutputGeneration — the pre-merge rows
-            # never had a value)
-            if c in self._target_cols:
-                return F.expr(f"{self.tgt}.{c}")
-            dt = next(f.dataType for f in self._schema.fields
-                      if f.name == c)
-            return F.lit(None).cast(dt)
-
-        pre = (joined.filter(F.col("__action").startswith("u"))
-               .select(*[tgt_val(c).alias(c) for c in cols])
-               .withColumn("_change_type", F.lit("update_preimage")))
+        insert (MergeOutputGeneration CDF projection). Insert images
+        are taken verbatim from ``insert_df`` (the finalized output
+        frame, __action kept), so identity values allocated by
+        _finalize_inserts land identically in the feed. Pre-images of
+        schema-evolved columns are NULL (reference
+        MergeOutputGeneration — the pre-merge rows never had a
+        value)."""
+        pre_sqls = [f"{self._tgt_ref(c)} AS {quote_ident(c)}" for c in cols]
+        updated = joined.filter("__action LIKE 'u%'")
+        pre = updated.selectExpr(*pre_sqls, "'update_preimage' AS _change_type")
         post = (self._apply_generated_merge(
-                    joined.filter(F.col("__action").startswith("u"))
-                    .select(*[self._value_column(c, snapshot).alias(c) for c in cols],
-                            F.col("__action")), snapshot)
+                    updated.selectExpr(*self._output_sqls(cols), "`__action`"),
+                    snapshot)
                 .withColumn("_change_type", F.lit("update_postimage")))
-        dels = (joined.filter(F.col("__action").startswith("d"))
-                .select(*[tgt_val(c).alias(c) for c in cols])
-                .withColumn("_change_type", F.lit("delete")))
-        if insert_df is not None:
-            ins = (insert_df.filter(F.col("__action").startswith("i"))
-                   .select(*cols)
-                   .withColumn("_change_type", F.lit("insert")))
-        else:
-            ins = (self._apply_generated_merge(
-                       joined.filter(F.col("__action").startswith("i"))
-                       .select(*[self._value_column(c, snapshot).alias(c) for c in cols],
-                               F.col("__action")), snapshot)
-                   .withColumn("_change_type", F.lit("insert")))
+        dels = joined.filter("__action LIKE 'd%'").selectExpr(
+            *pre_sqls, "'delete' AS _change_type")
+        ins = (insert_df.filter("__action LIKE 'i%'")
+               .selectExpr(*[quote_ident(c) for c in cols],
+                           "'insert' AS _change_type"))
         cdf_df = pre.unionByName(post).unionByName(dels).unionByName(ins)
         return write_cdc_files(cdf_df, snapshot.table_path, snapshot)
 

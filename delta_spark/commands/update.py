@@ -21,14 +21,12 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import SparkSession, functions as F
-
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from delta_spark.commands.delete import cdf_enabled, find_touched_files
 from delta_spark.log import DeltaLog
 from delta_spark.reader import read_files_df
-from delta_spark.stats import DEFAULT_NUM_INDEXED_COLS
+from delta_spark.schema import quote_ident, sql_string_literal, sql_type
 from delta_spark.transaction import OptimisticTransaction, dml_transaction
 from delta_spark.writer import write_cdc_files, write_table_files
 
@@ -89,68 +87,71 @@ def apply_generated_after_update(df: DataFrame, schema: T.StructType,
     return df
 
 
-def resolve_set_exprs(set_exprs: dict[str, str],
-                      schema: T.StructType) -> dict:
-    """{SET target: SQL expr} → ({top-level column: new-value Column},
-    {column: equivalent SQL text} or None when any target is a nested
-    struct field — withField has no plain-SQL spelling). The SQL map
-    feeds the one-string selectExpr projection in execute_update (same
-    driver-overhead rationale as merge._value_column_sql).
-    Targets resolve like Spark identifiers — optionally backquoted,
-    case-insensitive — and dotted paths update ONE struct field in
-    place, preserving its siblings (UpdateExpressionsSupport
+def _struct_set_sql(ref: str, dt: T.StructType, assigns: list) -> str:
+    """SQL for struct ``ref`` with some (nested) fields replaced and
+    every sibling kept: the struct is rebuilt by named_struct over its
+    declared fields, and a NULL struct stays NULL (Spark's UpdateFields
+    semantics).
+    ``assigns``: [(resolved field path, SQL value)], non-overlapping."""
+    fields = []
+    for f in dt.fields:
+        sub = [(path[1:], v) for path, v in assigns if path[0] == f.name]
+        fref = f"{ref}.{quote_ident(f.name)}"
+        if not sub:
+            val = fref
+        elif not sub[0][0]:
+            val = f"CAST(({sub[0][1]}) AS {sql_type(f.dataType)})"
+        else:
+            val = _struct_set_sql(fref, f.dataType, sub)
+        fields.append(f"{sql_string_literal(f.name)}, {val}")
+    return (f"CASE WHEN ({ref}) IS NULL THEN NULL "
+            f"ELSE named_struct({', '.join(fields)}) END")
+
+
+def set_value_sqls(assigns: list, schema: T.StructType, ref) -> dict[str, str]:
+    """SET assignments [(identifier parts, SQL value)] → {top-level
+    column: SQL text of its new value}; ``ref(column)`` is the SQL text
+    of the column's current value. Targets resolve like Spark
+    identifiers (case-insensitive), and dotted paths update ONE struct
+    field in place, preserving its siblings (UpdateExpressionsSupport
     generateUpdateExpressions). Values are cast to the target field's
-    declared type, matching the rewrite projection's old behavior."""
-    assigns: dict[str, list] = {}
+    declared type."""
+    by_col: dict[str, list] = {}
     by_fold = {f.name.lower(): f for f in schema.fields}
-    for k, v in set_exprs.items():
-        parts = _split_ident(k)
+    for parts, v in assigns:
+        key = ".".join(parts)
         f = by_fold.get(parts[0].lower())
         if f is None:
-            raise ValueError(f"SET targets not in table schema: [{k!r}]")
+            raise ValueError(f"SET targets not in table schema: [{key!r}]")
         path, dt = [], f.dataType
         for p in parts[1:]:
             if not isinstance(dt, T.StructType):
                 raise ValueError(
-                    f"SET target {k!r}: {'.'.join([f.name] + path)} "
+                    f"SET target {key!r}: {'.'.join([f.name] + path)} "
                     "is not a struct")
             nf = {x.name.lower(): x for x in dt.fields}.get(p.lower())
             if nf is None:
-                raise ValueError(f"SET targets not in table schema: [{k!r}]")
+                raise ValueError(f"SET targets not in table schema: [{key!r}]")
             path.append(nf.name)
             dt = nf.dataType
-        assigns.setdefault(f.name, []).append((tuple(path), v, dt))
-    from delta_spark.schema import relax_nullability
-
+        path = tuple(path)
+        # overlapping paths (equal OR prefix-nested, e.g. s.a and s.a.b,
+        # or s and s.a) are order-dependent last-wins — reject instead
+        for prev, _ in by_col.get(f.name, []):
+            n = min(len(prev), len(path))
+            if prev[:n] == path[:n]:
+                raise ValueError(
+                    f"conflicting SET assignments to column {f.name!r}"
+                    + (f" fields {'.'.join(prev)} and {'.'.join(path)}"
+                       if n else ""))
+        by_col.setdefault(f.name, []).append((path, v))
     out = {}
-    out_sql: dict[str, str] | None = {}
-    for col, lst in assigns.items():
-        whole = [a for a in lst if not a[0]]
-        if whole and len(lst) > 1:
-            raise ValueError(f"conflicting SET assignments to column {col!r}")
-        if whole:
-            out[col] = F.expr(whole[0][1]).cast(relax_nullability(whole[0][2]))
-            if out_sql is not None:
-                out_sql[col] = (f"CAST(({whole[0][1]}) AS "
-                                f"{relax_nullability(whole[0][2]).simpleString()})")
-            continue
-        out_sql = None  # nested struct SET: withField has no SQL spelling
-        seen: list = []
-        e = F.col(col)
-        for path, sql, dt in lst:
-            # overlapping paths (equal OR prefix-nested, e.g. s.a and
-            # s.a.b) are order-dependent last-wins — reject instead
-            for prev in seen:
-                n = min(len(prev), len(path))
-                if prev[:n] == path[:n]:
-                    raise ValueError(
-                        f"conflicting SET assignments to column {col!r} "
-                        f"fields {'.'.join(prev)} and {'.'.join(path)}")
-            seen.append(path)
-            e = e.withField(".".join(f"`{p}`" for p in path),
-                            F.expr(sql).cast(relax_nullability(dt)))
-        out[col] = e
-    return out, out_sql
+    for col, lst in by_col.items():
+        if lst[0][0]:
+            out[col] = _struct_set_sql(ref(col), schema[col].dataType, lst)
+        else:
+            out[col] = f"CAST(({lst[0][1]}) AS {sql_type(schema[col].dataType)})"
+    return out
 
 
 def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str],
@@ -175,27 +176,24 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
             app, ver, current_time_millis())
     snapshot = txn.snapshot
     cfg = snapshot.configuration
-    num_indexed = int(cfg.get("delta.dataSkippingNumIndexedCols", DEFAULT_NUM_INDEXED_COLS))
     cond = condition if condition and condition.strip() else "true"
 
     schema_cols = [f.name for f in snapshot.schema.fields]
-    upd, upd_sqls = resolve_set_exprs(set_exprs, snapshot.schema)
+    upd = set_value_sqls([(_split_ident(k), v) for k, v in set_exprs.items()],
+                         snapshot.schema, quote_ident)
     from delta_spark.schema import identity_info
 
     for c in set(upd) & set(identity_info(snapshot.schema)):
         # DeltaErrors.identityColumnUpdateNotSupported (:3069)
         raise ValueError(f"UPDATE on IDENTITY column {c!r} is not supported")
-    part_cols = set(snapshot.partition_columns)
-    if part_cols & set(upd):
-        # reference also forbids updating partition columns via rewrite
-        # shortcuts; support it by full-row rewrite (the projection below
-        # handles it naturally since we re-partition on write)
-        pass
+    # post-update row: the whole projection is ONE selectExpr parse
+    post_sqls = [f"{upd[c]} AS {quote_ident(c)}" if c in upd
+                 else quote_ident(c) for c in schema_cols]
 
     candidates = txn.files_for_scan(None if cond == "true" else cond)
     if str(cfg.get("delta.enableDeletionVectors", "false")).lower() == "true":
-        return _dv_update(spark, txn, upd, cond, cfg, schema_cols,
-                          candidates)
+        return _dv_update(spark, txn, upd, post_sqls, cond, cfg,
+                          schema_cols, candidates)
     touched = find_touched_files(spark, snapshot, candidates, cond)
     txn.read_files.update(f.path for f in touched)
     if not touched:
@@ -213,65 +211,36 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
         touched_df = read_files_with_stable_ids(spark, snapshot, touched)
     else:
         touched_df = read_files_df(spark, snapshot, touched)
-    cond_col = F.coalesce(F.expr(cond), F.lit(False))
-    mat = matv = None
+    cond_sql = f"COALESCE(({cond}), FALSE)"
+    # rewrite projection: CASE WHEN cond THEN new ELSE old END for SET
+    # columns, the rest copied verbatim
+    texts = [
+        (f"CASE WHEN {cond_sql} THEN {upd[c]} "
+         f"ELSE {quote_ident(c)} END AS {quote_ident(c)}")
+        if c in upd else quote_ident(c)
+        for c in schema_cols
+    ]
     if row_tracked:
         # updated rows KEEP their stable row id but take the commit's
         # new row-commit-version (materialized column nulled → default)
         mat = materialized_row_id_col(snapshot)
         matv = materialized_row_commit_col(snapshot)
-    selected = None
-    if upd_sqls is not None:
-        # one-string fast path: the whole rewrite projection as ONE
-        # selectExpr call — text-identical CASE/CAST semantics to the
-        # Column chain below, minus ~5 py4j round trips per column of
-        # driver time (matters on wide tables; merge._value_column_sql
-        # is the same trade). Falls through on any DDL type text the
-        # parser rejects.
-        def bq(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
-        cond_sql = f"COALESCE(({cond}), FALSE)"
-        texts = [
-            (f"CASE WHEN {cond_sql} THEN {upd_sqls[c]} "
-             f"ELSE {bq(c)} END AS {bq(c)}") if c in upd_sqls else bq(c)
-            for c in schema_cols
-        ]
         if mat is not None:
-            texts.append(bq(mat))
+            texts.append(quote_ident(mat))
         if matv is not None:
             texts.append(f"CASE WHEN {cond_sql} THEN CAST(NULL AS BIGINT) "
-                         f"ELSE {bq(matv)} END AS {bq(matv)}")
-        try:
-            selected = touched_df.selectExpr(*texts)
-        except Exception:
-            selected = None
-    if selected is None:
-        out_cols = [
-            (F.when(cond_col, upd[c])
-              .otherwise(F.col(c))).alias(c) if c in upd else F.col(c)
-            for c in schema_cols
-        ]
-        if mat is not None:
-            out_cols.append(touched_df[mat])
-        if matv is not None:
-            out_cols.append(
-                F.when(cond_col, F.lit(None).cast("long"))
-                .otherwise(touched_df[matv]).alias(matv))
-        selected = touched_df.select(*out_cols)
+                         f"ELSE {quote_ident(matv)} END AS {quote_ident(matv)}")
     projected = apply_generated_after_update(
-        selected, snapshot.schema, upd)
+        touched_df.selectExpr(*texts), snapshot.schema, upd)
     adds = write_table_files(projected, snapshot)
     removes = [f.remove() for f in touched]
 
     cdc = []
     if cdf_enabled(cfg):
-        pre = touched_df.filter(cond_col).withColumn("_change_type", F.lit("update_preimage"))
+        matched = touched_df.filter(cond_sql)
+        pre = matched.withColumn("_change_type", F.lit("update_preimage"))
         post = (apply_generated_after_update(
-                    touched_df.filter(cond_col)
-                    .select(*[upd[c].alias(c)
-                              if c in upd else F.col(c) for c in schema_cols]),
-                    snapshot.schema, upd)
+                    matched.selectExpr(*post_sqls), snapshot.schema, upd)
                 .withColumn("_change_type", F.lit("update_postimage")))
         cdc = write_cdc_files(pre.unionByName(post), snapshot.table_path, snapshot)
 
@@ -283,7 +252,7 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
     return txn.commit(list(adds) + list(removes) + list(cdc), "UPDATE", params, metrics)
 
 
-def _dv_update(spark: SparkSession, log_txn, upd: dict,
+def _dv_update(spark: SparkSession, log_txn, upd: dict, post_sqls: list[str],
                cond: str, cfg: dict, schema_cols: list[str],
                candidates) -> int:
     """Deletion-vector UPDATE (UpdateCommand.scala:139): mask the
@@ -294,10 +263,10 @@ def _dv_update(spark: SparkSession, log_txn, upd: dict,
     and the CDF write share one pass over the candidates."""
     from delta_spark.commands.delete import mask_rows_with_dvs
     from delta_spark.reader import (
-        _base_row_id_expr,
         materialized_row_commit_col,
         materialized_row_id_col,
         read_files_with_index,
+        with_stable_row_ids,
     )
 
     txn = log_txn
@@ -309,35 +278,30 @@ def _dv_update(spark: SparkSession, log_txn, upd: dict,
                               "false")).lower() == "true"
     visible = read_files_with_index(spark, snapshot, candidates,
                                     request_materialized_row_id=row_tracked)
-    cond_col = F.coalesce(F.expr(cond), F.lit(False))
-    matched = visible.filter(cond_col).persist()
+    texts = list(post_sqls)
+    if row_tracked:
+        # updated rows KEEP their stable id (materialized value, else
+        # default baseRowId+position) and take the new commit's
+        # row-commit-version (null → default)
+        visible = with_stable_row_ids(visible, snapshot, candidates)
+        mat = materialized_row_id_col(snapshot)
+        matv = materialized_row_commit_col(snapshot)
+        if mat is not None:
+            texts.append(quote_ident(mat))
+        if matv is not None:
+            texts.append(f"CAST(NULL AS BIGINT) AS {quote_ident(matv)}")
+    matched = visible.filter(f"COALESCE(({cond}), FALSE)").persist()
     try:
-        positions = matched.select(F.col("__file_base").alias("file_base"),
-                                   F.col("__row_idx").alias("row_index"))
+        positions = matched.selectExpr("__file_base AS file_base",
+                                       "__row_idx AS row_index")
         dv_adds, removes, updated_rows = mask_rows_with_dvs(
             spark, txn, candidates, positions)
         if updated_rows == 0 and not removes:
             return txn.commit([], "UPDATE", {"predicate": cond},
                               {"numUpdatedRows": "0"})
 
-        out_cols = [
-            upd[c].alias(c) if c in upd else F.col(c)
-            for c in schema_cols
-        ]
-        if row_tracked:
-            # updated rows KEEP their stable id (materialized value,
-            # else default baseRowId+position) and take the new
-            # commit's row-commit-version (null → default)
-            mat = materialized_row_id_col(snapshot)
-            matv = materialized_row_commit_col(snapshot)
-            if mat is not None:
-                base = _base_row_id_expr(snapshot, candidates,
-                                         "__file_base", "__row_idx")
-                out_cols.append(F.coalesce(matched[mat], base).alias(mat))
-            if matv is not None:
-                out_cols.append(F.lit(None).cast("long").alias(matv))
         new_adds = write_table_files(
-            apply_generated_after_update(matched.select(*out_cols),
+            apply_generated_after_update(matched.selectExpr(*texts),
                                          snapshot.schema, upd), snapshot)
 
         cdc = []
@@ -345,10 +309,7 @@ def _dv_update(spark: SparkSession, log_txn, upd: dict,
             pre = (matched.select(*schema_cols)
                    .withColumn("_change_type", F.lit("update_preimage")))
             post = (apply_generated_after_update(
-                        matched.select(*[upd[c].alias(c)
-                                         if c in upd else F.col(c)
-                                         for c in schema_cols]),
-                        snapshot.schema, upd)
+                        matched.selectExpr(*post_sqls), snapshot.schema, upd)
                     .withColumn("_change_type", F.lit("update_postimage")))
             cdc = write_cdc_files(pre.unionByName(post), snapshot.table_path, snapshot)
     finally:

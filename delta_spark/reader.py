@@ -142,25 +142,26 @@ def read_files_df(
     for d in dfs[1:]:
         out = out.unionByName(d)
     if mapped:
-        # physical → logical projection. Nested struct fields are
-        # physically named too (reference contract), so a top-level
-        # alias isn't enough: CAST to the logical shape renames at
-        # every nesting level (struct casts are positional in Spark).
-        from delta_spark.schema import strip_nested_metadata_type
-
-        def back(p, l):
-            if isinstance(l.dataType, (T.StructType, T.ArrayType, T.MapType)):
-                return F.col(p.name).cast(
-                    strip_nested_metadata_type(l.dataType)).alias(l.name)
-            # primitives (incl. geo read as WKB binary) keep the plain
-            # alias — a cast would fight the geo restore seam below
-            return F.col(p.name).alias(l.name)
-
-        out = out.select(*([back(p, l) for p, l in
+        out = out.select(*([_logical_col(p, l) for p, l in
                             zip(schema.fields, logical_schema.fields)]
                            + ([F.col("__cdf_file_key")] if with_file_key
                               else [])))
     return _geo.restore(out, logical_schema)
+
+
+def _logical_col(p: T.StructField, l: T.StructField):
+    """Physical → logical projection of one column. Nested struct
+    fields are physically named too (reference contract), so a
+    top-level alias isn't enough: CAST to the logical shape renames at
+    every nesting level (struct casts are positional in Spark)."""
+    if isinstance(l.dataType, (T.StructType, T.ArrayType, T.MapType)):
+        from delta_spark.schema import strip_nested_metadata_type
+
+        return F.col(p.name).cast(
+            strip_nested_metadata_type(l.dataType)).alias(l.name)
+    # primitives (incl. geo read as WKB binary) keep the plain alias —
+    # a cast would fight the geo restore seam
+    return F.col(p.name).alias(l.name)
 
 
 def deleted_rows_df(spark: SparkSession, snapshot, files) -> Optional[DataFrame]:
@@ -325,7 +326,7 @@ def read_files_with_index(spark: SparkSession, snapshot, files,
           .withColumn("__file_base", file_key_col())
           .withColumn("__row_idx", F.col("_metadata.row_index")))
     if snapshot.column_mapping_enabled:
-        df = df.select(*([F.col(p.name).alias(l.name)
+        df = df.select(*([_logical_col(p, l)
                           for p, l in zip(read_schema.fields, schema.fields)]
                          + [df[c] for c in mat_cols]
                          + [F.col("__file_base"), F.col("__row_idx")]))
@@ -454,16 +455,34 @@ def read_with_row_ids(spark: SparkSession, snapshot) -> DataFrame:
             .drop(*drop))
 
 
+def with_stable_row_ids(df: DataFrame, snapshot, files) -> DataFrame:
+    """Populate the materialized row-id / row-commit-version columns of
+    a ``read_files_with_index(..., request_materialized_row_id=True)``
+    frame with their stable values: the existing materialized value
+    when a file carries it, else the default generated one (baseRowId
+    + position-in-file; the AddFile's defaultRowCommitVersion)."""
+    mat = materialized_row_id_col(snapshot)
+    matv = materialized_row_commit_col(snapshot)
+    if mat is not None:
+        base = _base_row_id_expr(snapshot, files, "__file_base", "__row_idx")
+        df = df.withColumn(mat, F.coalesce(df[mat], base))
+    if matv is not None:
+        default_ver = _file_lit_map(
+            snapshot, files,
+            lambda f: f.defaultRowCommitVersion or 0)[F.col("__file_base")]
+        df = df.withColumn(matv, F.coalesce(df[matv], default_ver))
+    return df
+
+
 def read_files_with_stable_ids(spark: SparkSession, snapshot,
                                files) -> DataFrame:
     """Rewrite input on a row-tracked table: visible rows of `files`
     with the MATERIALIZED row-id / row-commit-version columns populated
-    (existing materialized value preferred, else the default generated
-    value) — writers MUST preserve stable row IDs when rearranging or
-    updating data (PROTOCOL.md Writer Requirements for Row Tracking;
-    MaterializedRowTrackingColumn.scala). Callers that MODIFY a row
-    null out its commit-version column so the row picks up the new
-    commit's default."""
+    (with_stable_row_ids) — writers MUST preserve stable row IDs when
+    rearranging or updating data (PROTOCOL.md Writer Requirements for
+    Row Tracking; MaterializedRowTrackingColumn.scala). Callers that
+    MODIFY a row null out its commit-version column so the row picks up
+    the new commit's default."""
     mat = materialized_row_id_col(snapshot)
     if mat is None:
         return read_files_df(spark, snapshot, files)
@@ -476,11 +495,5 @@ def read_files_with_stable_ids(spark: SparkSession, snapshot,
         return out
     df = read_files_with_index(spark, snapshot, files,
                                request_materialized_row_id=True)
-    base = _base_row_id_expr(snapshot, files, "__file_base", "__row_idx")
-    df = df.withColumn(mat, F.coalesce(df[mat], base))
-    if matv is not None:
-        default_ver = _file_lit_map(
-            snapshot, files,
-            lambda f: f.defaultRowCommitVersion or 0)[F.col("__file_base")]
-        df = df.withColumn(matv, F.coalesce(df[matv], default_ver))
-    return df.drop("__file_base", "__row_idx")
+    return with_stable_row_ids(df, snapshot, files).drop(
+        "__file_base", "__row_idx")

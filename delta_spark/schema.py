@@ -212,20 +212,34 @@ def expressions_referencing(schema: T.StructType, configuration: dict,
     return out
 
 
-def relax_nullability(dt: T.DataType) -> T.DataType:
-    """Deep-nullable copy of a type: DML value expressions (CASE
-    branches, update_fields over NOT NULL struct fields) produce
-    nullable values that cannot cast to a NOT NULL struct type.
-    Nullability is enforced at the write seam, not per-expression."""
+def quote_ident(name: str) -> str:
+    """Backquoted SQL identifier (`a b`; an embedded backquote is
+    doubled), safe to splice into any SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string_literal(s: str) -> str:
+    """``s`` as a Spark SQL single-quoted literal (the default parser
+    processes backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """Type text the SQL parser reads back as ``dt``: simpleString()
+    with backquoted struct field names (``struct<a b:int>`` does not
+    parse, ``struct<`a b`:int>`` does). Parsed types are nullable at
+    every level, so a CAST to this text also relaxes NOT NULL fields —
+    DML value expressions produce nullable values, and nullability is
+    enforced at the write seam, not per expression."""
     if isinstance(dt, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, relax_nullability(f.dataType), True, f.metadata)
-            for f in dt.fields])
+        return "struct<" + ",".join(
+            f"{quote_ident(f.name)}:{sql_type(f.dataType)}"
+            for f in dt.fields) + ">"
     if isinstance(dt, T.ArrayType):
-        return T.ArrayType(relax_nullability(dt.elementType), True)
+        return f"array<{sql_type(dt.elementType)}>"
     if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, relax_nullability(dt.valueType), True)
-    return dt
+        return f"map<{sql_type(dt.keyType)},{sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def _has_collations_key(node) -> bool:

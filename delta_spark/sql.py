@@ -347,7 +347,7 @@ def delta_sql(spark: SparkSession, statement: str) -> Any:
 
     m = re.fullmatch(rf"(?is)\s*UPDATE\s+(?:{_PATH})\s+SET\s+(?P<sets>.+?)(?:\s+WHERE\s+(?P<where>.+?))?\s*", s)
     if m:
-        # keep backticks intact: update.resolve_set_exprs parses
+        # keep backticks intact: update._split_ident parses
         # quoted/dotted identifiers itself (stripping here mangles
         # `a`.`b` into one bogus identifier)
         sets = _parse_set_list(m.group("sets"))
@@ -682,7 +682,7 @@ def _parse_set_list(s: str) -> dict[str, str]:
     for part in _split_top_level(s):
         k, v = part.split("=", 1)
         # keep backticks: the DML resolvers parse quoted/dotted
-        # identifiers themselves (update.resolve_set_exprs)
+        # identifiers themselves (update._split_ident)
         out[k.strip()] = v.strip()
     return out
 

@@ -8,9 +8,12 @@ schema) and delta_spark.writer.write_table_files for phase 2 — and
 writes their explain("formatted") output. Interception works on any
 engine version, so the same script produces the before/after pair:
 
-    PYTHONPATH=<tree> python scripts/capture_merge_plans.py out_prefix
+    PYTHONPATH=<tree> python scripts/capture_merge_plans.py out_prefix [--dv]
 
-emits out_prefix_phase1.txt and out_prefix_phase2.txt.
+emits out_prefix_phase1.txt and out_prefix_phase2.txt. With --dv the
+target has deletion vectors enabled, so phase 2 writes only the changed
+rows and a third job builds the DV bitmaps (recognized by its
+per-file bitmap schema); its frame goes to out_prefix_dvjob.txt.
 """
 
 from __future__ import annotations
@@ -27,10 +30,20 @@ if not os.environ.get("PYTHONPATH"):
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 PHASE1_SCHEMAS = ({"max_matches", "files"}, {"n_matches", "n_rows", "files"})
+DVJOB_SCHEMA = {"file_base", "data", "cardinality", "max_row_index"}
+
+
+def _explain(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution
+        .ExplainMode.fromString("formatted"))
 
 
 def main() -> None:
-    prefix = sys.argv[1] if len(sys.argv) > 1 else "/tmp/merge_plan"
+    args = [a for a in sys.argv[1:] if a != "--dv"]
+    use_dv = "--dv" in sys.argv[1:]
+    prefix = args[0] if args else "/tmp/merge_plan"
+    expected = ("phase1", "phase2", "dvjob") if use_dv else ("phase1", "phase2")
     captured: dict[str, str] = {}
 
     # Spark 4 instances are pyspark.sql.classic.dataframe.DataFrame,
@@ -46,9 +59,9 @@ def main() -> None:
     def collect(self):
         names = set(self.schema.fieldNames())
         if "phase1" not in captured and names in PHASE1_SCHEMAS:
-            captured["phase1"] = self._jdf.queryExecution().explainString(
-                self._sc._jvm.org.apache.spark.sql.execution
-                .ExplainMode.fromString("formatted"))
+            captured["phase1"] = _explain(self)
+        elif "dvjob" not in captured and names == DVJOB_SCHEMA:
+            captured["dvjob"] = _explain(self)
         return orig_collect(self)
 
     DataFrame.collect = collect
@@ -59,9 +72,7 @@ def main() -> None:
 
     def write_table_files(df, snapshot, *a, **kw):
         if "phase2" not in captured:
-            captured["phase2"] = df._jdf.queryExecution().explainString(
-                df._sc._jvm.org.apache.spark.sql.execution
-                .ExplainMode.fromString("formatted"))
+            captured["phase2"] = _explain(df)
         return orig_write(df, snapshot, *a, **kw)
 
     writer.write_table_files = write_table_files
@@ -92,6 +103,8 @@ def main() -> None:
                      "o_orderdate", "o_orderpriority"))
 
     d = DeltaTable.forPath(spark, dest)
+    if use_dv:
+        d.setProperties({"delta.enableDeletionVectors": "true"})
     (d.merge(merge_src, "target.o_orderkey = source.o_orderkey")
      .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
 
@@ -100,8 +113,9 @@ def main() -> None:
         with open(out, "w") as fh:
             fh.write(text)
         print(f"wrote {out} ({len(text)} bytes)")
-    if len(captured) < 2:
-        print(f"WARNING: only captured {sorted(captured)}", file=sys.stderr)
+    missing = [p for p in expected if p not in captured]
+    if missing:
+        print(f"WARNING: did not capture {missing}", file=sys.stderr)
     shutil.rmtree(scratch, ignore_errors=True)
 
 

@@ -44,6 +44,74 @@ def test_special_names_work_with_mapping(spark, tmp_table):
     assert all(" " not in p and "," not in p for p in phys.values())
 
 
+@pytest.mark.parametrize("dv", [False, True], ids=["rewrite", "dv"])
+def test_merge_special_names_with_mapping(spark, tmp_table, dv):
+    """Every MERGE shape on a name-mapped table whose column names need
+    backquotes: each generated SQL text must quote them."""
+    cfg = {**NAME_CFG, "delta.enableDeletionVectors": str(dv).lower()}
+    write_delta(_df(spark), tmp_table, configuration=cfg)
+    dt = DeltaTable.forPath(spark, tmp_table)
+
+    def merge(src_sql):
+        return dt.merge(spark.sql(src_sql), "t.ok = s.ok",
+                        target_alias="t", source_alias="s")
+
+    def rows():
+        return sorted(tuple(r) for r in dt.toDF().collect())
+
+    (merge("SELECT * FROM VALUES (10, 20, 3), (7, 8, 9) AS v(`a b`, `x,y`, ok)")
+     .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
+    assert rows() == [(4, 5, 6), (7, 8, 9), (10, 20, 3)]
+    (merge("SELECT 6 AS ok, 1 AS n")
+     .whenMatchedUpdate(set={"`a b`": "t.`a b` + s.n"})
+     .whenNotMatchedInsert(values={"ok": "s.ok", "`x,y`": "s.n"}).execute())
+    assert rows() == [(5, 5, 6), (7, 8, 9), (10, 20, 3)]
+    merge("SELECT 9 AS ok").whenMatchedDelete().execute()           # delete-only
+    assert rows() == [(5, 5, 6), (10, 20, 3)]
+    (merge("SELECT 11 AS ok, 12 AS `a b`")                          # insert-only
+     .whenNotMatchedInsert(values={"ok": "s.ok", "`a b`": "s.`a b`",
+                                   "`x,y`": "s.`a b` + 1"}).execute())
+    assert rows() == [(5, 5, 6), (10, 20, 3), (12, 13, 11)]
+    (merge("SELECT 3 AS ok")
+     .whenNotMatchedBySourceUpdate(set={"`x,y`": "0"}).execute())
+    assert rows() == [(5, 0, 6), (10, 20, 3), (12, 0, 11)]
+
+
+QUOTED_FIELD_SCHEMA = "id int, s struct<`a b`:int,c:string>"
+
+
+@pytest.mark.parametrize("dv", [False, True], ids=["rewrite", "dv"])
+def test_merge_struct_field_needing_quotes(spark, tmp_table, dv):
+    """A struct whose field name needs backquotes survives MERGE both
+    copied whole (its type text is spliced into a CAST) and updated
+    field-wise."""
+    cfg = {**NAME_CFG, "delta.enableDeletionVectors": str(dv).lower()}
+    write_delta(spark.createDataFrame([(1, (10, "p")), (2, (20, "q"))],
+                                      QUOTED_FIELD_SCHEMA),
+                tmp_table, configuration=cfg)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77) AS v(id, nv)")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(set={"t.s.`a b`": "s.nv"})
+       .whenNotMatchedInsert(values={"id": "s.id"})
+       .execute())
+    rows = {r["id"]: None if r["s"] is None else tuple(r["s"])
+            for r in dt.toDF().collect()}
+    assert rows == {1: (10, "p"), 2: (99, "q"), 3: None}
+
+
+@pytest.mark.parametrize("dv", [False, True], ids=["rewrite", "dv"])
+def test_update_whole_struct_with_quoted_field(spark, tmp_table, dv):
+    cfg = {**NAME_CFG, "delta.enableDeletionVectors": str(dv).lower()}
+    write_delta(spark.createDataFrame([(1, (10, "p")), (2, (20, "q"))],
+                                      QUOTED_FIELD_SCHEMA),
+                tmp_table, configuration=cfg)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    dt.update(set={"s": "named_struct('a b', 5, 'c', 'z')"}, condition="id = 1")
+    rows = {r["id"]: tuple(r["s"]) for r in dt.toDF().collect()}
+    assert rows == {1: (5, "z"), 2: (20, "q")}
+
+
 def test_schema_evolution_to_invalid_name_rejected(spark, tmp_table):
     write_delta(spark.sql("SELECT 1 AS ok"), tmp_table)
     bad = spark.sql("SELECT 2 AS ok, 9 AS `new col`")
@@ -95,50 +163,92 @@ def test_conflicting_set_targets_rejected(spark, tmp_table):
         dt.update(set={"s": "named_struct('x', 1)", "s.x": "2"})
 
 
-def test_nested_set_target_dv_path(spark, tmp_table):
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a')), "
-        "(2, named_struct('x', 20, 'y', 'b')) AS t(id, s)")
-    write_delta(df, tmp_table,
-                configuration={"delta.enableDeletionVectors": "true"})
+# table configurations every nested-SET test runs under: DV on/off
+# (mask-and-append vs file rewrite), each with and without CDF
+NESTED_SET_CFGS = [
+    pytest.param({"delta.enableDeletionVectors": "true"}, id="dv"),
+    pytest.param({}, id="rewrite"),
+    pytest.param({"delta.enableDeletionVectors": "true",
+                  "delta.enableChangeDataFeed": "true"}, id="dv_cdf"),
+    pytest.param({"delta.enableChangeDataFeed": "true"}, id="rewrite_cdf"),
+]
+NESTED_SCHEMA = "id int, s struct<x:int,y:string,n:struct<b:int,c:string>>"
+
+
+def _nested_row(s):
+    """struct column → comparable tuple (None stays None)."""
+    if s is None:
+        return None
+    n = s["n"]
+    return (s["x"], s["y"], None if n is None else (n["b"], n["c"]))
+
+
+def _postimages(spark, tmp_table, version, key, value):
+    from delta_spark.cdf import table_changes
+
+    return {r[key]: value(r)
+            for r in table_changes(spark, DeltaLog.for_table(tmp_table),
+                                   version, version).collect()
+            if r["_change_type"] == "update_postimage"}
+
+
+@pytest.mark.parametrize("cfg", NESTED_SET_CFGS)
+def test_nested_set_target_dv_path(spark, tmp_table, cfg):
+    # id 3 has a NULL struct, id 4 a NULL inner struct: a field SET
+    # below a NULL parent leaves the parent NULL
+    df = spark.createDataFrame(
+        [(1, (10, "a", (1, "p"))), (2, (20, "b", (2, "q"))),
+         (3, None), (4, (40, "d", None))], NESTED_SCHEMA)
+    write_delta(df, tmp_table, configuration=cfg)
     dt = DeltaTable.forPath(spark, tmp_table)
-    dt.update(set={"s.x": "s.x + 1"}, condition="id = 2")
-    rows = {r["id"]: (r["s"]["x"], r["s"]["y"]) for r in dt.toDF().collect()}
-    assert rows == {1: (10, "a"), 2: (21, "b")}
+    dt.update(set={"s.x": "s.x + 1", "s.n.b": "s.n.b * 10"},
+              condition="id >= 2")
+    rows = {r["id"]: _nested_row(r["s"]) for r in dt.toDF().collect()}
+    expected = {1: (10, "a", (1, "p")), 2: (21, "b", (20, "q")),
+                3: None, 4: (41, "d", None)}
+    assert rows == expected
+    if "delta.enableChangeDataFeed" in cfg:
+        post = _postimages(spark, tmp_table, 1, "id",
+                           lambda r: _nested_row(r["s"]))
+        assert post == {k: v for k, v in expected.items() if k >= 2}
 
 
-def test_merge_nested_and_backquoted_set(spark, tmp_table):
-    from pyspark.sql import functions as F
-
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a'), 5), "
-        "(2, named_struct('x', 20, 'y', 'b'), 6) AS t(id, s, v)")
-    # nullable columns: the merge below inserts a row with a NULL struct
-    from pyspark.sql import types as T
-
-    def relax(dt):
-        if isinstance(dt, T.StructType):
-            return T.StructType([
-                T.StructField(f.name, relax(f.dataType), True, f.metadata)
-                for f in dt.fields])
-        return dt
-
-    df = spark.createDataFrame(df.collect(), relax(df.schema))
-    write_delta(df, tmp_table)
+@pytest.mark.parametrize("cfg", NESTED_SET_CFGS)
+def test_merge_nested_and_backquoted_set(spark, tmp_table, cfg):
+    # nullable columns: the merge below inserts a row with a NULL
+    # struct; id 5 has a NULL struct and id 6 a NULL inner struct
+    df = spark.createDataFrame(
+        [(1, (10, "a", (1, "p")), 5), (2, (20, "b", (2, "q")), 6),
+         (5, None, 7), (6, (60, "f", None), 8)],
+        NESTED_SCHEMA + ", v int")
+    write_delta(df, tmp_table, configuration=cfg)
     dt = DeltaTable.forPath(spark, tmp_table)
-    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77) AS t(id, nv)")
+    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77), (5, 55), "
+                    "(6, 66) AS t(id, nv)")
     (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
-       .whenMatchedUpdate(set={"t.s.x": "s.nv", "`v`": "s.nv"})
+       .whenMatchedUpdate(set={"t.s.x": "s.nv", "t.s.n.b": "s.nv + 1",
+                               "`v`": "s.nv"})
        .whenNotMatchedInsert(values={"`id`": "s.id", "v": "s.nv"})
        .execute())
-    rows = {r["id"]: (r["s"]["x"] if r["s"] else None,
-                      r["s"]["y"] if r["s"] else None, r["v"])
-            for r in dt.toDF().collect()}
-    # matched: s.x updated in place (sibling y kept), v updated
-    assert rows[2] == (99, "b", 99)
-    assert rows[1] == (10, "a", 5)
-    # inserted row: struct is null, v from source
-    assert rows[3] == (None, None, 77)
+
+    def image(r):
+        return (_nested_row(r["s"]), r["v"])
+
+    rows = {r["id"]: image(r) for r in dt.toDF().collect()}
+    expected = {
+        # matched: s.x and s.n.b updated in place (siblings kept)
+        2: ((99, "b", (100, "q")), 99),
+        # matched below a NULL parent: the parent stays NULL
+        5: (None, 55),
+        6: ((66, "f", None), 66),
+        1: ((10, "a", (1, "p")), 5),
+        # inserted row: struct is null, v from source
+        3: (None, 77),
+    }
+    assert rows == expected
+    if "delta.enableChangeDataFeed" in cfg:
+        post = _postimages(spark, tmp_table, 1, "id", image)
+        assert post == {k: expected[k] for k in (2, 5, 6)}
 
 
 def test_sql_update_nested_and_backquoted(spark, tmp_table):

@@ -662,3 +662,90 @@ def test_merge_insert_and_by_source_clause_order(spark, tmp_table):
      .execute())
     assert sorted((r.k, r.v) for r in dt.toDF().collect()) == \
         [(1, -1), (3, 0), (4, 401)]
+
+
+@pytest.fixture()
+def wide_dml_shuffle(spark):
+    """Give a tiny DML its full shuffle width (no size-scoped narrowing,
+    no AQE coalescing), so its join output spans several partitions."""
+    from delta_spark.util import DML_TARGET_PARTITION_BYTES_CONF
+
+    confs = {DML_TARGET_PARTITION_BYTES_CONF: "1",
+             "spark.sql.shuffle.partitions": "8",
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("dv", [True, False], ids=["dv", "rewrite"])
+def test_merge_metrics_exact(spark, tmp_table, wide_dml_shuffle, dv):
+    """MERGE operationMetrics are exact on a multi-file target whose
+    join spans several partitions: with deletion vectors the DV bitmap
+    job and the new-file write read the same persisted rows
+    concurrently, and the metrics must not depend on which finishes
+    first. Source rows that no insert clause takes are not deletes."""
+    cfg = {"delta.enableDeletionVectors": str(dv).lower()}
+    write_delta(spark.range(0, 400, numPartitions=4)
+                .selectExpr("id AS k", "id % 7 AS v"),
+                tmp_table, configuration=cfg)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    assert len(DeltaLog.for_table(tmp_table).update().all_files) == 4
+    # source keys 0, 3, ..., 597: 134 match (67 even → delete, 67 odd →
+    # update), 66 don't (33 even → insert, 33 odd → no clause applies)
+    src = spark.range(0, 600, 3, numPartitions=4).selectExpr("id AS k",
+                                                             "id AS nv")
+    (dt.merge(src, "t.k = s.k", target_alias="t", source_alias="s")
+     .whenMatchedDelete(condition="s.k % 2 = 0")
+     .whenMatchedUpdate(set={"v": "s.nv"})
+     .whenNotMatchedInsert(condition="s.k % 2 = 0",
+                           values={"k": "s.k", "v": "s.nv"})
+     .execute())
+    m = dt.history(1).collect()[0]["operationMetrics"]
+    expected = {"numTargetRowsUpdated": "67", "numTargetRowsDeleted": "67",
+                "numTargetRowsInserted": "33",
+                # every file holds matched keys: all 400 - 134 unmatched
+                # target rows are in touched files
+                "numTargetRowsCopied": "266"}
+    if dv:
+        expected["numDeletionVectorsAdded"] = "4"
+    assert {k: m.get(k) for k in expected} == expected
+    assert dt.toDF().count() == 400 - 67 + 33
+
+
+def test_dv_merge_keeps_both_thread_and_write_errors(spark, tmp_table,
+                                                     monkeypatch):
+    """When the DV bitmap job (driver thread) and the new-file write
+    both fail, the write's error is raised with the DV job's error as
+    its cause — neither is lost."""
+    import delta_spark.commands.merge as merge_mod
+
+    dv_err = RuntimeError("dv job failed")
+    write_err = RuntimeError("write failed")
+
+    def fail_dv(*a, **kw):
+        raise dv_err
+
+    def fail_write(*a, **kw):
+        raise write_err
+
+    write_delta(spark.range(10).selectExpr("id AS k", "id AS v"), tmp_table,
+                configuration={"delta.enableDeletionVectors": "true"})
+    dt = DeltaTable.forPath(spark, tmp_table)
+    monkeypatch.setattr(merge_mod, "mask_rows_with_dvs", fail_dv)
+    monkeypatch.setattr(merge_mod, "write_table_files", fail_write)
+    src = spark.range(5, 15).selectExpr("id AS k", "id * 10 AS nv")
+    with pytest.raises(RuntimeError) as ei:
+        (dt.merge(src, "t.k = s.k", target_alias="t", source_alias="s")
+         .whenMatchedUpdate(set={"v": "s.nv"})
+         .whenNotMatchedInsert(values={"k": "s.k", "v": "s.nv"})
+         .execute())
+    assert ei.value is write_err
+    assert ei.value.__cause__ is dv_err
+    assert dt.toDF().count() == 10   # nothing committed
